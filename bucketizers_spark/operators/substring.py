@@ -57,7 +57,7 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from bucketizers_spark.operators.core import (
@@ -328,7 +328,8 @@ def _grouped_walk(
     node (a node's arrivals all share its level-L prefix), and arrivals
     at the level-L nodes themselves are exactly these rows. One shuffle
     for the entire remaining trie. Returns a kinds frame
-    (kind 'a' assignment / 'r' relation / 'c' counter), lineage-truncated.
+    (kind 'a' assignment / 'r' relation / 'c' counter increment: the
+    batch's arrivals counted at a touched node), lineage-truncated.
 
     With ``state`` (streaming: carried node counters ``_st_node/_st_cnt``),
     each counter row is routed to its level-L ancestor group via a cogroup —
@@ -351,6 +352,7 @@ def _grouped_walk(
         pdf: pd.DataFrame, counters: dict, walk_root: str = root
     ) -> pd.DataFrame:
         records = pdf.sort_values(seq_col).to_dict("records")
+        seeded = dict(counters)
         buckets, relations, touched = _walk(
             records, py_nodes, sep, level, page_size, walk_root, seq_col,
             max_depth, counters,
@@ -384,7 +386,7 @@ def _grouped_walk(
                 "kind": "c",
                 "from_bucket": None,
                 "vals": None,
-                "cnt": counters[n],
+                "cnt": counters[n] - seeded.get(n, 0),
             }
             for n in touched
         ]
@@ -508,6 +510,17 @@ def _grouped_walk(
     )
 
 
+def _cut_counted(df: DataFrame, cond: Column) -> tuple[DataFrame, int]:
+    """Cut ``df``'s lineage and count its rows matching ``cond`` in the
+    cut's own job: an Observation rides the eager cut, so the count costs
+    no extra action. One Observation per cut (each reports only once)."""
+    obs = Observation()
+    cut = df.observe(obs, F.count(F.when(cond, 1)).alias("n")).transform(
+        cut_lineage
+    )
+    return cut, obs.get["n"]
+
+
 def _run_cascade(
     df: DataFrame,
     chain: _Chain,
@@ -529,7 +542,12 @@ def _run_cascade(
     capacity is page_size - cnt, and chain-exhausted multi-word members get
     no bucket even as first in-batch arrivals). With
     ``emit_counter_updates`` the result carries a ``counter_updates``
-    DataFrame (node, cnt) of post-batch totals for all touched nodes.
+    DataFrame (node, cnt): the complete post-batch counter table, carried
+    and touched nodes alike. Every counted arrival (root, each cascade
+    level, per-parent level 0) contributes a ``(node, 1)`` row and the
+    grouped walk its per-node increments; these are unioned with
+    ``node_state`` and reduced by ONE ``groupBy("node").sum``, evaluated
+    when the caller writes the table.
 
     With ``parent_col`` every level is keyed by (parent, node): a dedicated
     child-trie instance per parent bucket (MultiBucketizer.ts:94-96) whose
@@ -554,13 +572,18 @@ def _run_cascade(
     # and the final assignment union — consumes `work`, and without a
     # cut each action re-evaluates the whole normalize+chain prep over
     # the corpus (measured 3-4 evaluations ≈ 3-4× the prep cost per
-    # query at sf1.0). One eager cut pays the prep exactly once.
-    work = chain.slim(chain.prepare(slim_in)).transform(cut_lineage)
+    # query at sf1.0). One eager cut pays the prep exactly once; it also
+    # counts the non-empty rows the root places from.
+    work, total_work = _cut_counted(
+        chain.slim(chain.prepare(slim_in)), F.col("_m") > 0
+    )
 
     assignment_parts: list[DataFrame] = []
     relation_parts: list[DataFrame] = []
+    # counter increments: (node, cnt) rows, summed once over node_state
     counter_parts: list[DataFrame] = []
     persisted: list[DataFrame] = []
+    one = F.lit(1).cast("long").alias("cnt")
 
     state = node_state
     if state is not None:
@@ -623,7 +646,6 @@ def _run_cascade(
         )
         thr_df = merged.select(
             parent_col,
-            F.coalesce(F.col("_st_cnt"), F.lit(0)).alias("_rcnt"),
             rcap.alias("_rcap"),
             # strict: when the merged candidate list holds exactly rcap
             # seqs the true group may be larger (every salt bucket
@@ -639,25 +661,19 @@ def _run_cascade(
         # thr_df is one row per distinct parent — broadcast (the cascade
         # path targets few giant parents; high-cardinality parents belong
         # on the per-group walk, where groups are small)
-        work = work.join(F.broadcast(thr_df), parent_col, "left").transform(cut_lineage)
         placed0_cond = (F.col("_rcap") > 0) & (
             F.col("_rthr").isNull() | (F.col(seq_col) <= F.col("_rthr"))
+        )
+        work, remaining_cnt = _cut_counted(
+            work.join(F.broadcast(thr_df), parent_col, "left"), ~placed0_cond
         )
         placed0 = work.where(placed0_cond)
         assignment_parts.append(
             placed0.select(seq_col, F.col(parent_col).alias("bucket_id"))
         )
         if emit_counter_updates:
-            counter_parts.append(
-                placed0.groupBy(parent_col, "_rcnt")
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .select(
-                    F.col(parent_col).alias("node"),
-                    (F.col("_rcnt") + F.col("_n")).alias("cnt"),
-                )
-            )
-        remaining = work.where(~placed0_cond).drop("_rthr", "_rcap", "_rcnt")
-        remaining_cnt = remaining.count()
+            counter_parts.append(placed0.select(F.col(parent_col).alias("node"), one))
+        remaining = work.where(~placed0_cond).drop("_rthr", "_rcap")
         level = 0
     else:
         # ---- level 0: the root. Global top-(remaining capacity) by seq — a
@@ -669,7 +685,6 @@ def _run_cascade(
             row = state.where(F.col("_st_node") == root).collect()
             root_cnt = row[0]["_st_cnt"] if row else 0
         root_cap = max(page_size - root_cnt, 0)
-        total_work = work.count()
         thr = None
         if root_cap > 0 and total_work > 0:
             head = (
@@ -684,18 +699,10 @@ def _run_cascade(
                 placed0.select(seq_col, F.lit(root).alias("bucket_id"))
             )
             if emit_counter_updates:
-                counter_parts.append(
-                    placed0.agg(
-                        (F.count(F.lit(1)) + F.lit(root_cnt)).alias("cnt")
-                    ).select(F.lit(root).alias("node"), "cnt")
-                )
+                counter_parts.append(placed0.select(F.lit(root).alias("node"), one))
             remaining = work.where(F.col(seq_col) > F.lit(thr))
         else:
             remaining = work
-            if emit_counter_updates and root_cnt:
-                counter_parts.append(
-                    spark.createDataFrame([(root, root_cnt)], "node string, cnt long")
-                )
 
         level = 0
         # no job needed: seq is unique, so the root places exactly
@@ -789,15 +796,12 @@ def _run_cascade(
                     ),
                 )
             )
-            # localCheckpoint (eager) truncates the per-level lineage —
-            # without it the level-over-level plan (esp. the salted path's
-            # self-join) grows exponentially and OOMs the planner
             step = step.withColumn(
                 "_first_nt",
                 F.max(
                     F.when(F.col("_rn") == 1, (~F.col("_terminal")).cast("int"))
                 ).over(wfull),
-            ).transform(cut_lineage)
+            )
 
             exists = F.col("_st_cnt").isNotNull()
             # capacity available to non-terminal arrivals this batch:
@@ -896,7 +900,7 @@ def _run_cascade(
                 .alias("_nt_thr"),
             )
 
-            step = lvl.join(node_aggs, [*pcols, "_node"]).transform(cut_lineage)
+            step = lvl.join(node_aggs, [*pcols, "_node"])
             exists = F.col("_st_cnt").isNotNull()
             placed_nt = ~F.col("_terminal") & (
                 F.col("_nt_thr").isNull()
@@ -914,6 +918,14 @@ def _run_cascade(
                 relation_parent = F.when(
                     raw_parent == "", F.lit(root)
                 ).otherwise(raw_parent)
+
+        # the eager cut (localCheckpoint) truncates the per-level lineage —
+        # without it the level-over-level plan (esp. the salted path's
+        # self-join) grows exponentially and OOMs the planner; its job
+        # also counts the rows that cascade to the next level
+        step, remaining_cnt = _cut_counted(
+            step, ~F.col("_terminal") & ~placed_nt
+        )
 
         # terminal arrivals: on a fresh node the first one creates+counts;
         # all later single-word terminals are assigned uncounted
@@ -958,14 +970,7 @@ def _run_cascade(
                 else F.col("_node")
             )
             counter_parts.append(
-                step.groupBy(*pcols, "_node")
-                .agg(
-                    (
-                        F.coalesce(F.max("_st_cnt"), F.lit(0))
-                        + F.sum(counted.cast("long"))
-                    ).alias("cnt")
-                )
-                .select(counter_key.alias("node"), "cnt")
+                step.where(counted).select(counter_key.alias("node"), one)
             )
         drop_cols = [
             c
@@ -974,7 +979,6 @@ def _run_cascade(
             and c not in ("_v", "_npos", "_m", "_multi")
         ]
         remaining = step.where(~F.col("_terminal") & ~placed_nt).drop(*drop_cols)
-        remaining_cnt = remaining.count()
 
     bucket_map = assignment_parts[0]
     for part in assignment_parts[1:]:
@@ -993,12 +997,16 @@ def _run_cascade(
     result = BucketizeResult(assignments, relations, empty_seals(spark))
     result.persisted = persisted  # caller may unpersist after materializing
     if emit_counter_updates:
-        updates = counter_parts[0] if counter_parts else spark.createDataFrame(
-            [], "node string, cnt long"
+        table = (
+            node_state.select("node", "cnt")
+            if node_state is not None
+            else spark.createDataFrame([], "node string, cnt long")
         )
-        for part in counter_parts[1:]:
-            updates = updates.unionByName(part)
-        result.counter_updates = updates
+        for part in counter_parts:
+            table = table.unionByName(part)
+        result.counter_updates = table.groupBy("node").agg(
+            F.sum("cnt").alias("cnt")
+        )
     return result
 
 

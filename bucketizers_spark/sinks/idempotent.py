@@ -30,6 +30,19 @@ import json
 import os
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+
+def _batch_lineage(df: DataFrame) -> dict:
+    """Per-batch manifest lineage — row count, plus the seq range when
+    ``df`` has a ``seq`` column and rows — from ONE aggregate."""
+    aggs = [F.count(F.lit(1)).alias("rows")]
+    if "seq" in df.columns:
+        aggs += [F.min("seq").alias("seq_min"), F.max("seq").alias("seq_max")]
+    row = df.agg(*aggs).collect()[0].asDict()
+    if not row["rows"]:
+        return {"rows": 0}
+    return row
 
 
 class LocalFsLister:
@@ -100,16 +113,7 @@ class IdempotentParquetSink:
             if batch_id in self.committed_batches():
                 return
             out = transform(batch_df) if transform else batch_df
-            from pyspark.sql import functions as F
-
-            cnt = out.count()
-            lineage = {"rows": cnt}
-            if "seq" in out.columns and cnt:
-                rng = out.agg(
-                    F.min("seq").alias("lo"), F.max("seq").alias("hi")
-                ).collect()[0]
-                lineage.update(seq_min=rng["lo"], seq_max=rng["hi"])
-            self.write_batch(out, batch_id, lineage)
+            self.write_batch(out, batch_id, _batch_lineage(out))
 
         return fn
 
@@ -163,6 +167,7 @@ class IcebergMergeSink:
         self.lister.ensure_dir(self.manifest_dir)
 
     committed_batches = IdempotentParquetSink.committed_batches
+    foreach_batch = IdempotentParquetSink.foreach_batch
 
     def merge_sql(self, source_view: str) -> str:
         on = " AND ".join(
@@ -185,21 +190,3 @@ class IcebergMergeSink:
         self.lister.publish_json(
             os.path.join(self.manifest_dir, f"{batch_id}.json"), meta
         )
-
-    def foreach_batch(self, transform=None):
-        def fn(batch_df: DataFrame, batch_id: int):
-            if batch_id in self.committed_batches():
-                return
-            out = transform(batch_df) if transform else batch_df
-            from pyspark.sql import functions as F
-
-            cnt = out.count()
-            lineage = {"rows": cnt}
-            if "seq" in out.columns and cnt:
-                rng = out.agg(
-                    F.min("seq").alias("lo"), F.max("seq").alias("hi")
-                ).collect()[0]
-                lineage.update(seq_min=rng["lo"], seq_max=rng["hi"])
-            self.write_batch(out, batch_id, lineage)
-
-        return fn

@@ -12,8 +12,11 @@ counter snapshot, versioned per batch id).
 
 Counter-table layout: ``<state_dir>/counters/v=<batch_id>/`` parquet of
 (node, cnt). Batch k reads the latest committed version < k, runs the
-state-aware cascade (operators/substring.py), writes version k. Replay of
-batch k rereads version k-1 → identical output. Chunked seq-ordered input
+state-aware cascade (operators/substring.py), writes version k. The
+cascade hands back the complete post-batch table — carried counters plus
+this batch's counted arrivals, reduced by one aggregate — and that frame
+is written as is: there is no merge step and no pre-write action. Replay
+of batch k rereads version k-1 → identical output. Chunked seq-ordered input
 (sources/stream.py) makes the result byte-equal to the batch cascade over
 the concatenated stream — pytest-pinned.
 
@@ -89,9 +92,10 @@ class TrieStreamJob:
         spark = batch_df.sparkSession
         if batch_id in self.sink.committed_batches():
             return  # replayed and already fully committed — exactly-once
-        # the cascade runs several actions (thresholds, counts, sink +
-        # counter writes); without caching, each one re-scans the batch
-        # source (observed 8x input re-reads via StreamingQueryProgress)
+        # the cascade runs several actions (lineage cuts, the root
+        # threshold, sink + counter writes); without caching, each one
+        # re-scans the batch source (observed 8x input re-reads via
+        # StreamingQueryProgress)
         batch_df = batch_df.persist()
         state = self._latest_counters(spark, batch_id)
         if self.parent_col is not None:
@@ -126,15 +130,6 @@ class TrieStreamJob:
             else:
                 res = substring_trie(batch_df, self.value_col, **kwargs)
 
-        # merge updates over prior state (touched nodes carry new totals;
-        # untouched nodes carry over)
-        updates = res.counter_updates
-        if state is not None:
-            carried = state.join(updates.select("node"), "node", "left_anti")
-            updates = updates.unionByName(carried)
-        updates = updates.persist()
-        updates.count()
-
         # Counters are written BEFORE the main sink's manifest commit: a
         # crash after the sink commit but before a v=batch_id counter write
         # would otherwise leave the batch permanently committed (replay
@@ -143,10 +138,9 @@ class TrieStreamJob:
         # counters first is safe because _latest_counters only reads
         # versions < batch_id, so a replayed batch recomputes from v-1 and
         # overwrites v=batch_id idempotently.
-        self._write_counters(updates, batch_id)
+        self._write_counters(res.counter_updates, batch_id)
         self.rel_sink.write_batch(res.relations, batch_id)
         self.sink.foreach_batch()(res.assignments, batch_id)
-        updates.unpersist()
         batch_df.unpersist()
         for p in res.persisted:
             p.unpersist()

@@ -402,6 +402,24 @@ class TestGlobalRank:
         got2 = {r["key"]: r["rank0"] for r in slow.collect()}
         assert got2 == {k: i for i, k in enumerate(expect)}
 
+    @pytest.mark.parametrize("probe_uncut", [True, False])
+    @pytest.mark.parametrize("keys", [(1, 1, 3), (1, 3, None), (-1, -1, 1)])
+    def test_duplicate_or_null_keys_never_take_dense_shortcut(
+        self, spark, probe_uncut, keys
+    ):
+        """Keys whose duplicates or null cancel out the gap (1, 1, 3:
+        count 3 = max - min + 1) are not dense: ranks must still be a
+        permutation of 0..n-1 in key order, on both the uncut and the
+        cut probe."""
+        from bucketizers_spark.operators.rank import with_global_rank0
+
+        df = spark.createDataFrame([(k,) for k in keys], "key long")
+        out = with_global_rank0(df, "key", probe_uncut=probe_uncut).collect()
+        got = sorted((r["rank0"], r["key"]) for r in out)
+        assert [r for r, _ in got] == [0, 1, 2]
+        non_null = [k for _, k in got if k is not None]
+        assert non_null == sorted(non_null)
+
     def test_threshold_selects_physical_path(self, spark):
         """Plan-shape pin (VERDICT r2 #5): above the threshold the rank
         must execute as the range-partitioned two-phase form — windows

@@ -6,6 +6,7 @@ path itself runs under every iterative-operator test in the suite."""
 
 from __future__ import annotations
 
+from pathlib import Path
 from types import SimpleNamespace
 
 from bucketizers_spark.plans.materialize import cut_lineage
@@ -50,21 +51,52 @@ def test_reliable_checkpoint_path_runs_for_real(tmp_path):
     would otherwise leak into the shared fixture. Runs an actual
     iterative operator (connected_components) under a configured
     checkpoint dir and asserts both the result and that reliable
-    checkpoint data landed in the dir."""
+    checkpoint data landed in the dir. The trie cascade, whose per-level
+    counts ride the cut's own job as Observations, must give the same
+    assignments and counter table under checkpoint() as under
+    localCheckpoint(), on the window, salted and grouped-walk paths."""
     import subprocess
     import sys
     import textwrap
 
     ckpt = tmp_path / "ckpt"
+    repo = str(Path(__file__).resolve().parents[1])
     script = textwrap.dedent(
         f"""
         import sys
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, {repo!r})
         from pyspark.sql import SparkSession
         spark = (SparkSession.builder.master("local[2]")
                  .config("spark.sql.shuffle.partitions", "2")
+                 .config("spark.sql.execution.arrow.pyspark.enabled", "true")
                  .config("spark.ui.enabled", "false").getOrCreate())
+        from bucketizers_spark.operators.substring import token_prefix_trie
+        from bucketizers_spark.sources.synthetic import token_stream_df
+        tokens = token_stream_df(spark, 600, seed=7)
+        paths = [dict(salt_buckets=0, tail_threshold=0),
+                 dict(salt_buckets=4, tail_threshold=0), dict()]
+
+        def trie_runs():
+            out = []
+            for kw in paths:
+                res = token_prefix_trie(tokens, "tokens", page_size=10,
+                                        max_depth=5,
+                                        emit_counter_updates=True, **kw)
+                out.append((
+                    sorted(tuple(r) for r in
+                           res.assignments.select("seq", "bucket_id").collect()),
+                    sorted(tuple(r) for r in res.counter_updates.collect()),
+                ))
+            return out
+
+        local = trie_runs()
         spark.sparkContext.setCheckpointDir({str(ckpt)!r})
+        assert trie_runs() == local, "checkpoint() cascade differs"
+        from pyspark.sql import functions as F
+        from bucketizers_spark.operators.substring import _cut_counted
+        keyed = spark.range(1000).groupBy((F.col("id") % 10).alias("k")).count()
+        cut, n = _cut_counted(keyed, F.col("k") < 4)
+        assert (n, cut.count()) == (4, 10), n
         from bucketizers_spark.operators.graph import connected_components
         edges = spark.createDataFrame(
             [("a", "b"), ("b", "c"), ("x", "y")], "src string, dst string"

@@ -47,8 +47,33 @@ def assignments_map(df):
     return {r.seq: r.bucket_id for r in rows}
 
 
+#: TrieStreamJob configurations per cascade path: the window cascade, the
+#: salted cascade (the benchmark's path), the grouped-walk default, and
+#: the per-parent child trie
+TRIE_PATHS = {
+    "cascade": dict(salt_buckets=0, tail_threshold=0),
+    "salted": dict(salt_buckets=4, tail_threshold=0),
+    "walk": dict(),
+    "parent": dict(parent_col="source"),
+}
+
+
+def counter_table(df):
+    rows = df.select("node", "cnt").collect()
+    table = {r.node: r.cnt for r in rows}
+    assert len(table) == len(rows), "duplicate counter nodes"
+    return table
+
+
 class TestTrieStream:
-    def test_incremental_equals_batch(self, spark, workdir, stream_pdf):
+    @pytest.mark.parametrize("path", list(TRIE_PATHS))
+    def test_incremental_equals_batch(self, spark, workdir, stream_pdf, path):
+        """Stream == batch over the concatenated stream, for assignments
+        AND the last committed counter version, which must be the full
+        counter table one batch run produces."""
+        from bucketizers_spark.operators.multi import trie_within_parent
+
+        opts = TRIE_PATHS[path]
         chunk_dir = os.path.join(workdir, "chunks")
         stage_chunks(stream_pdf, chunk_dir, n_chunks=5)
         job = TrieStreamJob(
@@ -57,6 +82,7 @@ class TestTrieStream:
             mode="token",
             page_size=20,
             max_depth=6,
+            **opts,
         )
         stream = read_token_stream(spark, chunk_dir, max_files_per_trigger=1)
         q = job.start(stream, os.path.join(workdir, "ckpt"))
@@ -65,11 +91,52 @@ class TestTrieStream:
 
         got = assignments_map(job.sink.read_all(spark))
         batch_df = spark.createDataFrame(stream_pdf, TOKEN_STREAM_SCHEMA)
-        res = token_prefix_trie(batch_df, "tokens", page_size=20, max_depth=6)
+        trie = dict(page_size=20, max_depth=6, emit_counter_updates=True)
+        trie.update((k, v) for k, v in opts.items() if k != "parent_col")
+        if "parent_col" in opts:
+            res = trie_within_parent(
+                batch_df, opts["parent_col"], "tokens", mode="token", **trie
+            )
+        else:
+            res = token_prefix_trie(batch_df, "tokens", **trie)
         want = assignments_map(res.assignments)
         assert got == want
+
+        counters = os.path.join(workdir, "state", "counters")
+        last = max(os.listdir(counters), key=lambda v: int(v.split("=")[1]))
+        assert last == "v=4"
+        got_counters = counter_table(spark.read.parquet(os.path.join(counters, last)))
+        assert got_counters == counter_table(res.counter_updates)
         for p in res.persisted:
             p.unpersist()
+
+    def test_carried_batch_job_train_is_bounded(self, spark, workdir, stream_pdf):
+        """A batch with carried counters runs one cut job per cascade
+        level and one aggregate for the counter table: no per-level
+        count, no pre-write count. Regrowing the job train fails here
+        (this batch ran 60 jobs before the fused counter aggregate and
+        the Observation counts, 34 after)."""
+        job = TrieStreamJob(
+            os.path.join(workdir, "sink"),
+            os.path.join(workdir, "state"),
+            mode="token",
+            page_size=20,
+            max_depth=6,
+            **TRIE_PATHS["salted"],
+        )
+        b0 = spark.createDataFrame(stream_pdf.iloc[:1000], TOKEN_STREAM_SCHEMA)
+        b1 = spark.createDataFrame(stream_pdf.iloc[1000:1250], TOKEN_STREAM_SCHEMA)
+        job.process_batch(b0, 0)
+        sc = spark.sparkContext
+        group = f"trie-train-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, "carried trie batch")
+        try:
+            job.process_batch(b1, 1)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert jobs <= 34 + 3, jobs
 
     def test_batch_replay_is_idempotent(self, spark, workdir, stream_pdf):
         chunk_dir = os.path.join(workdir, "chunks")
